@@ -1,159 +1,17 @@
-"""Benchmark inputs, generated from a seed.
+"""The MapReduce corpus, generated from the seed.
 
-* :func:`star_tables` writes the engine's star schema (``region nation
-  customer supplier part orders lineitem events``, one parquet file each)
-  with the column domains the catalog queries expect (``NATION_7``,
-  ``Brand#12``, ``1-URGENT``, January-2024 events, ...). Row counts scale
-  with ``sf`` like the engine's test data: lineitem is 6,000,000 x sf.
-* :func:`mr_corpus` writes a directory of consecutively numbered text files
-  whose words follow a Zipf distribution, and returns the exact word counts
-  the MapReduce batches must reproduce.
-
-Both are pure functions of their arguments: the same seed gives the same
-bytes.
+The catalog workloads read fixed tables instead: ``perfbench/data/sf<sf>/``
+holds byte-identical copies of the engine's deterministic test tables
+(``region nation customer supplier part orders lineitem events documents
+embeddings``, one parquet file each, seed 42).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 from collections import Counter
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-#: Bump when the generated tables change, so cached copies are rebuilt.
-STAR_VERSION = 1
-STAR_TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events",
-               "documents", "embeddings")
-
-_REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-_ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
-_NOUN = ["anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget"]
-_PTYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-_DAY_US = 86_400_000_000
-_DOC_WORDS = ("a agg batch big column customer data fast filter group hash join key line merge "
-              "order part query row scan slow small sort spark stream table the value vector window").split()
-
-
-def _days(start: str, offsets: np.ndarray) -> pa.Array:
-    base = np.datetime64(start, "us")
-    return pa.array(base + offsets.astype("timedelta64[D]").astype("timedelta64[us]"), pa.timestamp("us"))
-
-
-def _money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    cents = rng.integers(int(lo * 100), int(hi * 100) + 1, n)
-    return np.round(cents / 100.0, 2)
-
-
-def _pick(rng: np.random.Generator, values: list[str], n: int) -> pa.Array:
-    return pa.array(np.asarray(values, dtype=object)[rng.integers(0, len(values), n)], pa.string())
-
-
-def _star(sf: float, seed: int) -> dict[str, pa.Table]:
-    rng = np.random.default_rng(seed)
-    n_cust, n_supp, n_part = int(150_000 * sf), max(int(10_000 * sf), 10), int(200_000 * sf)
-    n_ord, n_li, n_ev, n_users = int(1_500_000 * sf), int(6_000_000 * sf), int(1_000_000 * sf), max(int(15_000 * sf), 15)
-    t: dict[str, pa.Table] = {}
-    t["region"] = pa.table({"r_regionkey": pa.array(range(5), pa.int32()), "r_name": _REGIONS})
-    t["nation"] = pa.table({
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-    })
-    t["customer"] = pa.table({
-        "c_custkey": pa.array(np.arange(n_cust), pa.int64()),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": pa.array(rng.integers(0, 25, n_cust), pa.int32()),
-        "c_acctbal": _money(rng, -999.99, 9999.99, n_cust),
-        "c_mktsegment": _pick(rng, _SEGMENTS, n_cust),
-    })
-    t["supplier"] = pa.table({
-        "s_suppkey": pa.array(np.arange(n_supp), pa.int64()),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": pa.array(rng.integers(0, 25, n_supp), pa.int32()),
-        "s_acctbal": _money(rng, -999.99, 9999.99, n_supp),
-    })
-    names = np.asarray([f"{a} {b}" for a in _ADJ for b in _NOUN], dtype=object)
-    keys = np.arange(n_part)
-    t["part"] = pa.table({
-        "p_partkey": pa.array(keys, pa.int64()),
-        "p_name": pa.array(names[rng.integers(0, len(names), n_part)], pa.string()),
-        "p_brand": pa.array([f"Brand#{b}" for b in rng.integers(1, 26, n_part)], pa.string()),
-        "p_type": _pick(rng, _PTYPES, n_part),
-        "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-        "p_retailprice": np.round(900.0 + (keys % 1000) / 10.0, 1),
-    })
-    t["orders"] = pa.table({
-        "o_orderkey": pa.array(np.arange(n_ord), pa.int64()),
-        "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), pa.int64()),
-        "o_orderstatus": _pick(rng, ["F", "O", "P"], n_ord),
-        "o_totalprice": _money(rng, 1000.0, 500000.0, n_ord),
-        "o_orderdate": _days("1995-01-01", rng.integers(0, 2405, n_ord)),
-        "o_orderpriority": _pick(rng, _PRIORITIES, n_ord),
-    })
-    t["lineitem"] = pa.table({
-        "l_orderkey": pa.array(rng.integers(0, n_ord, n_li), pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, n_part, n_li), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, n_supp, n_li), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, n_li), pa.int32()),
-        "l_quantity": rng.integers(1, 51, n_li).astype(np.float64),
-        "l_extendedprice": _money(rng, 900.0, 105000.0, n_li),
-        "l_discount": rng.integers(0, 11, n_li) / 100.0,
-        "l_tax": rng.integers(0, 9, n_li) / 100.0,
-        "l_returnflag": _pick(rng, ["A", "N", "R"], n_li),
-        "l_linestatus": _pick(rng, ["F", "O"], n_li),
-        "l_shipdate": _days("1995-01-02", rng.integers(0, 2499, n_li)),
-    })
-    # Events arrive in event_id order over January 2024 (30 days).
-    ts = np.sort(rng.integers(0, 30 * _DAY_US, n_ev)) + np.datetime64("2024-01-01", "us").astype(np.int64)
-    t["events"] = pa.table({
-        "event_id": pa.array(np.arange(n_ev), pa.int64()),
-        "ts": pa.array(ts.astype("datetime64[us]"), pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, n_users, n_ev), pa.int64()),
-        "event_type": _pick(rng, _EVENT_TYPES, n_ev),
-        "value": np.round(rng.exponential(50.0, n_ev), 2),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)], pa.string()),
-    })
-    n_doc, n_vec = max(int(50_000 * sf), 500), max(int(20_000 * sf), 500)
-    words = np.asarray(_DOC_WORDS, dtype=object)
-    texts = [" ".join(words[rng.integers(0, len(words), k)]) for k in rng.integers(15, 81, n_doc)]
-    t["documents"] = pa.table({
-        "doc_id": pa.array(np.arange(n_doc), pa.int64()),
-        "text": texts,
-        "lang": _pick(rng, ["en", "en", "de", "es", "fr", "zh"], n_doc),
-        "source": [f"src{i % 20}" for i in range(n_doc)],
-        "n_chars": pa.array([len(x) for x in texts], pa.int64()),
-    })
-    labels = rng.integers(0, 10, n_vec)
-    centers = rng.normal(0.0, 1.0, (10, 64))
-    vecs = (centers[labels] + rng.normal(0.0, 0.3, (n_vec, 64))).astype(np.float32)
-    t["embeddings"] = pa.table({
-        "vec_id": pa.array(np.arange(n_vec), pa.int64()),
-        "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
-    })
-    return t
-
-
-def star_tables(root: str, sf: float, seed: int = 42) -> str:
-    """Return a directory holding the star tables at ``sf``, generating it
-    under ``root`` on first use. The directory is published by an atomic
-    rename, so an interrupted generation never leaves a partial copy."""
-    out = os.path.join(root, f"star-v{STAR_VERSION}-sf{sf}-seed{seed}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    for name, table in _star(sf, seed).items():
-        pq.write_table(table, os.path.join(tmp, f"{name}.parquet"))
-    os.rename(tmp, out)
-    return out
 
 
 def mr_corpus(out_dir: str, seed: int, n_files: int, lines_per_file: int,

@@ -3,17 +3,17 @@ jobs, check every output, and compute the metrics.
 
 Timeline of a run:
 
-1. Session start plus warm-up (one tiny SQL job and the workload's own
-   warm-up), cold: the first setup sample.
+1. Cold setup: engine import, session start (JVM launch) and warm-up (one
+   tiny SQL job and the workload's own warm-up). This is ``setup_s``, in
+   CPU seconds of the process tree; one sample per run, because only the
+   first setup in a process is cold.
 2. Timed passes: every job of the workload in its order, one after the
    other, repeated until ``seconds`` have passed (at least one pass). The
    untraced run times only the construct call and the forcing call; the
    traced run also times Catalyst (``optimizedPlan()``, ``executedPlan()``)
    and reads Spark's status store and ``/proc`` after each job.
 3. Checks of the last pass's outputs, untimed.
-4. Four more setup samples: stop the session, start it again, run the tiny
-   SQL job. ``setup_s`` is the median CPU cost of the five samples.
-5. Stop the session and the JVM, and wait for every process to end.
+4. Stop the session and the JVM, and wait for every process to end.
 """
 
 from __future__ import annotations
@@ -27,11 +27,8 @@ import traceback
 from dataclasses import dataclass, field
 
 from perfbench import host
-from perfbench.metrics import PER_LAYER
 from perfbench.stats import tail
 from perfbench.workloads import WORKLOADS, Context, Job, WarmUp, Workload
-
-SETUP_SAMPLES = 5
 
 
 @dataclass
@@ -63,7 +60,7 @@ class SetupSample:
     cpu_s: float  # CPU seconds the process tree spent on both
 
 
-def _start_session(warm_up: WarmUp | None = None, extra_s: float = 0.0, extra_cpu_s: float = 0.0):
+def _start_session(warm_up: WarmUp | None, ctx: Context, extra_s: float, extra_cpu_s: float):
     """Start a session and warm it up; ``extra_*`` is setup work done just
     before (the engine import)."""
     from irio_mapreduce_spark.session import get_spark
@@ -73,7 +70,7 @@ def _start_session(warm_up: WarmUp | None = None, extra_s: float = 0.0, extra_cp
     t1 = time.perf_counter()
     _tiny_sql_job(spark)
     if warm_up is not None:
-        warm_up(spark)
+        warm_up(spark, ctx)
     t2 = time.perf_counter()
     cpu = host.tree_cpu_s(os.getpid()) - cpu0
     return spark, SetupSample(extra_s + t1 - t0, t2 - t1, extra_cpu_s + cpu)
@@ -134,7 +131,7 @@ class Run:
         self.records: list[JobRecord] = []
         self.pass_seconds: list[float] = []
         self.pass_cpu_s: list[float] = []
-        self.setup: list[SetupSample] = []
+        self.setup: SetupSample | None = None
         self.traced = None  # spans.TracedPass of a traced run
         self.trace_s = 0.0  # time the traced pass spent in self.traced
         self.layers: dict[str, float] = {}
@@ -199,15 +196,14 @@ class Run:
 
     def execute(self) -> dict:
         cpu0, psi0, wall0 = host.cpu_times(), host.cpu_pressure_us(), time.time()
-        sampler = host.RssSampler(os.getpid()).start()
+        sampler = host.RssSampler(os.getpid()).start() if self.trace else None
 
         t0, epoch0, cpu_import = time.perf_counter(), time.time(), host.tree_cpu_s(os.getpid())
         from irio_mapreduce_spark import queries  # noqa: F401  (engine import is part of setup)
 
         import_s, cpu_import = time.perf_counter() - t0, host.tree_cpu_s(os.getpid()) - cpu_import
-        jobs, warm_up = self.wl.make(self.ctx)  # generates inputs, untimed
-        spark, sample = _start_session(warm_up, import_s, cpu_import)
-        self.setup.append(sample)
+        jobs = self.wl.make(self.ctx)  # generates inputs, untimed
+        spark, self.setup = _start_session(self.wl.warm_up, self.ctx, import_s, cpu_import)
         sc = spark.sparkContext
         session = {
             "master": sc.master,
@@ -223,10 +219,12 @@ class Run:
 
             now = time.time()
             self.traced = TracedPass(spark, self.wl.name, self.seed, self.cores,
-                                     setup=(epoch0, now - sample.warm_s, now))
+                                     setup=(epoch0, now - self.setup.warm_s, now))
         self._timed_passes(spark, jobs)
-        sampler.stop()
+        if sampler is not None:
+            sampler.stop()
 
+        t_checks = time.perf_counter()
         last = [r for r in self.records if r.pass_index == len(self.pass_seconds) - 1]
         mismatches = {}
         for job, rec in zip(jobs, last):
@@ -238,12 +236,9 @@ class Run:
                 if why:
                     mismatches[rec.name] = why
         errors = {f"{r.name}#{r.pass_index}": r.error for r in self.records if r.error}
-
-        for _ in range(SETUP_SAMPLES - 1):
-            spark.stop()
-            spark, sample = _start_session()
-            self.setup.append(sample)
+        t_shutdown = time.perf_counter()
         _shutdown(spark)
+        untimed = {"checks_s": t_shutdown - t_checks, "shutdown_s": time.perf_counter() - t_shutdown}
 
         self.detail = {
             "workload": self.wl.name,
@@ -255,7 +250,8 @@ class Run:
             "pass_cpu_s": self.pass_cpu_s,
             "jobs": [{"name": r.name, "pass": r.pass_index, "seconds": r.seconds, "cpu_s": r.cpu_s,
                       "phases": {k: b - a for k, (a, b) in r.phases.items()}} for r in self.records],
-            "setup_samples": [vars(x) for x in self.setup],
+            "setup": vars(self.setup),
+            "untimed": untimed,
             "errors": errors,
             "mismatches": mismatches,
         }
@@ -265,12 +261,11 @@ class Run:
             self.layers["trace.overhead_s"] = self.trace_s
             self.layers["driver.jvm_rss_peak_mb"] = sampler.peak_jvm_bytes / 1e6
             self.layers["driver.tree_peak_mb"] = sampler.peak_tree_bytes / 1e6
-            self.layers["session.start_s"] = self.setup[0].start_s
-            self.layers["session.warm_s"] = self.setup[0].warm_s
+            self.layers["session.start_s"] = self.setup.start_s
+            self.layers["session.warm_s"] = self.setup.warm_s
             self.layers["session.default_parallelism"] = session["default_parallelism"]
             self.detail["orphans"] = self.traced.orphans
             self.detail["ambiguous"] = self.traced.ambiguous
-            self.layers = {k: self.layers[k] for k in PER_LAYER}
         self.detail["end_to_end"] = metrics
         self.detail["per_layer"] = self.layers
         failed = len(errors) + len(mismatches)
@@ -280,27 +275,21 @@ class Run:
 
     def _end_to_end(self) -> dict[str, float]:
         """The end-to-end metrics, in CPU seconds of the Spark driver's process
-        tree; the wall-clock figures go into the detail record."""
+        tree; the wall-clock and per-job figures go into the detail record."""
         walls = [r.seconds for r in self.records]
         cpus = [r.cpu_s for r in self.records]
         mb = sum(r.input_bytes for r in self.records) / 1e6
-        wall_tail, wall_pct = tail(walls)
-        cpu_tail, cpu_pct = tail(cpus)
+        wall_tail, pct = tail(walls)
         self.detail["wall"] = {
+            "setup_s": self.setup.start_s + self.setup.warm_s,
             "makespan_s": statistics.median(self.pass_seconds),
             "job_p50_s": statistics.median(walls),
             "job_tail_s": wall_tail,
             "throughput_mb_s": mb / sum(self.pass_seconds),
-            "setup_s": statistics.median(x.start_s + x.warm_s for x in self.setup),
         }
-        self.detail.update(job_tail_pct=cpu_pct, jobs_sampled=len(cpus))
-        return {
-            "setup_s": statistics.median(x.cpu_s for x in self.setup),
-            "cpu_s": statistics.median(self.pass_cpu_s),
-            "job_cpu_p50_s": statistics.median(cpus),
-            "job_cpu_tail_s": cpu_tail,
-            "mb_per_cpu_s": mb / sum(self.pass_cpu_s),
-        }
+        self.detail["job_cpu"] = {"p50_s": statistics.median(cpus), "tail_s": tail(cpus)[0]}
+        self.detail.update(job_tail_pct=pct, jobs_sampled=len(cpus))
+        return {"setup_s": self.setup.cpu_s, "cpu_s": statistics.median(self.pass_cpu_s)}
 
 
 def write_json(path: str, obj) -> None:

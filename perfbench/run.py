@@ -6,8 +6,8 @@
 Workloads are listed in ``perfbench/workloads.py`` and in BENCHMARK.json.
 The last line of standard output is one JSON object::
 
-    {"correct": true, "attempted": 6, "failed": 0,
-     "metrics": {"cpu_s": {"value": 34.75, "unit": "s"}, ...}}
+    {"correct": true, "attempted": 3, "failed": 0,
+     "metrics": {"setup_s": {"value": 29.74, "unit": "s"}, ...}}
 
 With ``--trace 0`` the metrics are the end-to-end ones; with ``--trace 1``
 they are the per-layer ones, and the spans go to
@@ -18,9 +18,10 @@ CPU pressure), per-job phase times, setup samples and any errors or output
 mismatches.
 
 The session is sized from the host: ``local[<cores>]`` with a driver heap
-of 60% of RAM. Generated tables and cached oracle answers live in
-``.perfbench/cache``; every run works in a fresh ``.perfbench/runs/...``
-directory (the engine's temp files included) that is removed at the end.
+of at most 60% of RAM. Every run works in a fresh ``.perfbench/runs/...``
+directory (the generated corpus and the engine's temp files included) that
+is removed at the end; DuckDB oracle answers are cached in
+``.perfbench/cache``. Metric names and units come from BENCHMARK.json.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ if ROOT not in sys.path:
     sys.path.insert(0, ROOT)
 
 from perfbench import host  # noqa: E402
-from perfbench.metrics import END_TO_END, PER_LAYER  # noqa: E402
+from perfbench import metrics  # noqa: E402
 
 
 def _sized_env(run_dir: str) -> dict[str, str]:
@@ -106,9 +107,9 @@ def main(argv: list[str] | None = None) -> int:
                 "cpu_s": run.detail["end_to_end"]["cpu_s"] - base["end_to_end"]["cpu_s"],
             }
     harness.write_json(stem + ".json", run.detail)
-    defs = PER_LAYER if args.trace else END_TO_END
-    metrics = run.layers if args.trace else result["metrics"]
-    result["metrics"] = {k: {"value": float(metrics[k]), "unit": unit} for k, (unit, *_) in defs.items()}
+    defs = metrics.load()["per_layer" if args.trace else "end_to_end"]
+    values = run.layers if args.trace else result["metrics"]
+    result["metrics"] = {m["name"]: {"value": float(values[m["name"]]), "unit": m["unit"]} for m in defs}
     out = json.dumps(run.detail, separators=(",", ":"), default=str) + "\n" + json.dumps(result) + "\n"
     os.write(real_stdout, out.encode())
     return 0

@@ -38,13 +38,10 @@ def traced_run(tmp_path_factory):
                                                    "q3_shipping_priority"])
     batches = workloads.mr_batch(n_files=2, lines_per_file=200, r_num=2)
 
-    def make(ctx):
-        jobs, _ = graph_stream_tpch(ctx)
-        mr_jobs, warm_up = batches(ctx)
-        return jobs + mr_jobs, warm_up
-
-    run = harness.Run(workloads.Workload("attribution", "test", make), seed=7, seconds=0, trace=True,
-                      cache_dir=str(work / "cache"), run_dir=str(work / "run"))
+    workload = workloads.Workload("attribution", lambda ctx: graph_stream_tpch(ctx) + batches(ctx),
+                                  workloads.WORKLOADS["mr_batch"].warm_up)
+    run = harness.Run(workload, seed=7, seconds=0, trace=True, cache_dir=str(work / "cache"),
+                      run_dir=str(work / "run"))
     try:
         result = run.execute()
     finally:

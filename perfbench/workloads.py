@@ -1,34 +1,36 @@
 """The benchmark's workloads: each is a list of benchmark jobs that one
 closed-loop client submits in a fixed order, each job only after the
 previous one has finished. The seed generates the MapReduce corpus; the
-catalog workloads run on fixed generated tables. (Seeding the order of the
-catalog entries was tried: on a fresh JVM the first job pays several
-seconds of JIT and code generation whichever job it is, so the seed moved
-the median job time by a quarter.)
+catalog workloads run on the engine's fixed test tables, copied into
+``perfbench/data``. (Seeding the order of the catalog entries was tried: on
+a fresh JVM the first job pays several seconds of JIT and code generation
+whichever job it is, so the seed moved the median job time by a quarter.)
 
 A job has three steps, all calls into the engine's public surface:
 ``build`` (the construct phase: a catalog callable, or a Batch spec),
 ``run`` (the execute phase: a ``noop`` write of the frame, or the Batch
 submission with its sink write) and ``check`` (untimed, after the pass).
 
-A workload may also have a warm-up, run once as part of the cold session
-setup: ``mr_batch`` starts the Python workers there, a cost every session
-pays once. (Warming the catalog workloads with an untimed entry of the same
-family was tried: it cost about twice the time it took off the pass.)
+A workload may also have a warm-up, run as part of the cold session setup:
+``mr_batch`` runs each Batch surface once on a tiny corpus there, which
+starts the Python workers and compiles the batch code paths, costs every
+session pays once. (Warming the catalog workloads with an untimed entry of
+the same family was tried: it cost about twice the time it took off the
+pass.)
 
 Three workloads fit the benchmark's time budget: 4 + 22 x (workloads) runs
-must end within 3420 s, and a run costs about 20 s of JVM launch,
-first-job JIT and shutdown before and after its pass. ``catalog`` runs any
-entry list, so a TPC-H workload is one more ``Workload`` here when the
-budget allows it.
+must end within 3420 s, and on a 4-core host a run took 30-48 s, of which
+13-25 s were JVM launch, warm-up, output checks and shutdown around its
+passes. ``catalog`` runs any entry list, so a TPC-H workload is one more
+``Workload`` here when the budget allows it.
 """
 
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import pickle
-import hashlib
 from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -57,19 +59,19 @@ class Job:
 
 @dataclass
 class Context:
-    cache_dir: str  # survives runs: generated tables, oracle results
+    cache_dir: str  # survives runs: oracle answers
     run_dir: str  # fresh per run
     seed: int
 
 
-WarmUp = Callable[[Any], None]
+WarmUp = Callable[[Any, Context], None]  # (spark, ctx) -> None
 
 
 @dataclass
 class Workload:
-    name: str
-    why: str
-    make: Callable[[Context], tuple[list[Job], WarmUp | None]]  # generates inputs
+    name: str  # BENCHMARK.json gives the reason for each
+    make: Callable[[Context], list[Job]]  # generates inputs
+    warm_up: WarmUp | None = None
 
 
 def _noop(spark, df):
@@ -77,15 +79,40 @@ def _noop(spark, df):
     return df
 
 
-def _oracle_result(ctx: Context, data_dir: str, name: str, sql: str) -> pd.DataFrame:
+DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+
+
+def catalog(sf: float, entries: list[str]) -> Callable[[Context], list[Job]]:
+    """Jobs running catalog entries on the fixed tables at ``sf``, each
+    checked against its DuckDB oracle."""
+
+    def make(ctx: Context) -> list[Job]:
+        from irio_mapreduce_spark import queries
+
+        data_dir = os.path.join(DATA_DIR, f"sf{sf}")
+        fns, oracles = queries.all_queries(), queries.all_oracles()
+        jobs = []
+        for name in entries:
+            sql = oracles[name]
+            size = sum(os.path.getsize(os.path.join(data_dir, f"{t}.parquet")) for t in tables_read(sql))
+
+            def check(spark, df, sql=sql):
+                return mismatch(df.toPandas(), _oracle_result(ctx, data_dir, sql))
+
+            jobs.append(Job(name, size, lambda spark, _p, fn=fns[name]: fn(spark, data_dir), _noop, check, True))
+        return jobs
+
+    return make
+
+
+def _oracle_result(ctx: Context, data_dir: str, sql: str) -> pd.DataFrame:
     """The oracle's answer, computed by DuckDB once per data set and SQL
-    text and cached, since both are fixed."""
-    key = hashlib.sha1(sql.encode()).hexdigest()[:16]
-    path = os.path.join(ctx.cache_dir, "oracle", os.path.basename(data_dir), f"{name}-{key}.pkl")
+    text and cached in the checkout (``k-core`` alone takes DuckDB 3 s)."""
+    key = hashlib.sha1(f"{os.path.basename(data_dir)}\0{sql}".encode()).hexdigest()
+    path = os.path.join(ctx.cache_dir, "oracle", f"{key}.pkl")
     if os.path.exists(path):
         with open(path, "rb") as fh:
             return pickle.load(fh)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
     duck_tmp = os.path.join(ctx.run_dir, "duckdb")
     os.makedirs(duck_tmp, exist_ok=True)
     oracle = Oracle(data_dir, duck_tmp)
@@ -93,34 +120,12 @@ def _oracle_result(ctx: Context, data_dir: str, name: str, sql: str) -> pd.DataF
         want = oracle.result(sql)
     finally:
         oracle.close()
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp{os.getpid()}"
     with open(tmp, "wb") as fh:
         pickle.dump(want, fh)
     os.replace(tmp, path)
     return want
-
-
-def catalog(sf: float, entries: list[str]) -> Callable[[Context], tuple[list[Job], None]]:
-    """Jobs running catalog entries on the generated star tables at ``sf``,
-    each checked against its DuckDB oracle."""
-
-    def make(ctx: Context) -> tuple[list[Job], None]:
-        from irio_mapreduce_spark import queries
-
-        data_dir = datagen.star_tables(os.path.join(ctx.cache_dir, "data"), sf)
-        fns, oracles = queries.all_queries(), queries.all_oracles()
-        jobs = []
-        for name in entries:
-            sql = oracles[name]
-            size = sum(os.path.getsize(os.path.join(data_dir, f"{t}.parquet")) for t in tables_read(sql))
-
-            def check(spark, df, name=name, sql=sql):
-                return mismatch(df.toPandas(), _oracle_result(ctx, data_dir, name, sql))
-
-            jobs.append(Job(name, size, lambda spark, _p, fn=fns[name]: fn(spark, data_dir), _noop, check, True))
-        return jobs, None
-
-    return make
 
 
 def _count_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -135,17 +140,21 @@ def _compare_counts(got: dict[str, int], want: Counter) -> str | None:
     return f"{len(wrong)} words differ, e.g. {wrong[0]!r}: {got.get(wrong[0])} != {want.get(wrong[0])}"
 
 
-def _start_python_workers(spark) -> None:
-    spark.range(spark.sparkContext.defaultParallelism).mapInPandas(lambda it: it, "id long").collect()
+def _warm_batches(spark, ctx: Context) -> None:
+    """Run each Batch surface once on a tiny corpus, so that the Python
+    workers start and the JVM compiles the batch code paths during setup."""
+    tiny = Context(ctx.cache_dir, os.path.join(ctx.run_dir, "warm"), ctx.seed)
+    for job in mr_batch(n_files=1, lines_per_file=200, r_num=2)(tiny):
+        job.run(spark, job.build(spark, 0))
 
 
-def mr_batch(n_files: int, lines_per_file: int, r_num: int) -> Callable[[Context], tuple[list[Job], WarmUp]]:
+def mr_batch(n_files: int, lines_per_file: int, r_num: int) -> Callable[[Context], list[Job]]:
     """The paper's traffic: one Batch (map chain -> hash partition -> reduce
     chain -> ``r_num`` files) over a directory of numbered text files,
     submitted three ways. Outputs are checked against word counts taken
     from the generated corpus."""
 
-    def make(ctx: Context) -> tuple[list[Job], WarmUp]:
+    def make(ctx: Context) -> list[Job]:
         from pyspark.sql import functions as F
 
         from irio_mapreduce_spark.batch_json import BinaryRegistry, submit_json_batch
@@ -212,7 +221,7 @@ def mr_batch(n_files: int, lines_per_file: int, r_num: int) -> Callable[[Context
             Job("batch_partition", size, lambda spark, p: spec(p, "partition", "parquet"), submit,
                 check_parquet, False),
             Job("json_batch_pipe", size, lambda spark, p: p, submit_json, check_text, False),
-        ], _start_python_workers
+        ]
 
     return make
 
@@ -220,24 +229,11 @@ def mr_batch(n_files: int, lines_per_file: int, r_num: int) -> Callable[[Context
 WORKLOADS = {
     w.name: w
     for w in [
-        Workload(
-            "mr_batch",
-            "The paper's own traffic: Batches over a seeded Zipf corpus in agg mode (sink write), "
-            "partition mode (per-key applyInPandas) and JSON batch with awk via RDD.pipe.",
-            mr_batch(n_files=8, lines_per_file=2000, r_num=4),
-        ),
-        Workload(
-            "graph_iter_sf0.01",
-            "Round-loop graph entries (PageRank, SSSP, k-core): driver-bound, construction and eager "
-            "checkpoint jobs dominate; where round fusion shows.",
-            catalog(0.01, ["graph_pagerank_purchases", "graph_sssp_weighted", "graph_kcore_cosupply"]),
-        ),
-        Workload(
-            "stream_drain_sf0.01",
-            "Streaming drains (window rollup, stream-stream join, watermark dedup): trigger planning, "
-            "WAL and offset commits, state store.",
-            catalog(0.01, ["stream_tumbling_rollup", "stream_stream_join_attrib",
-                           "stream_dedup_within_watermark"]),
-        ),
+        Workload("mr_batch", mr_batch(n_files=16, lines_per_file=2000, r_num=4), _warm_batches),
+        Workload("graph_iter_sf0.01",
+                 catalog(0.01, ["graph_pagerank_purchases", "graph_sssp_weighted", "graph_kcore_cosupply"])),
+        Workload("stream_drain_sf0.01",
+                 catalog(0.01, ["stream_tumbling_rollup", "stream_stream_join_attrib",
+                                "stream_dedup_within_watermark"])),
     ]
 }
